@@ -4,6 +4,10 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length != 2) {
+      System.err.println("usage: runMain graft.Verify <sfDir> <outDir>")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.local(cores = cpus, shufflePartitions = cpus, appName = "graft-verify")

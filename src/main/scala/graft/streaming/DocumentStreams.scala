@@ -74,163 +74,45 @@ object DocumentStreams {
   /** The reference's flagship query as a CONTINUOUS query: streaming word
     * count over the document stream — `WordCount.counts` shares its exact
     * tokenize/normalize/count expressions, so batch and stream agree term
-    * for term (and share the mr_wordcount oracle). Complete output mode +
-    * memory sink make it oracle-checkable from Verify (the same
-    * `_complete_oracle` harness convention as the event streams); a real
-    * deployment uses update mode into a keyed store. The aggregation state
+    * for term (and share the mr_wordcount oracle). The complete-mode
+    * drain makes it oracle-checkable from Verify (the same harness as the
+    * event streams); a real deployment uses update mode into a keyed
+    * store ([[wordCountsViaKeyedStore]]). The aggregation state
     * is one row per DISTINCT WORD — vocabulary-bounded, not stream-bounded
     * — which is why a global unwatermarked count is legitimate here.
     */
   def wordCountsToBatch(spark: SparkSession, dir: String): DataFrame =
     EventStreams.drainCompleteToBatch(
-      spark,
-      graft.operators.WordCount.counts(rawSource(spark, dir), "text"),
-      s"stream_wordcount_${System.nanoTime()}")
+      graft.operators.WordCount.counts(rawSource(spark, dir), "text"))
 
   /** PRODUCTION shape for the streaming wordcount (the documented twin of
-    * [[wordCountsToBatch]]'s complete-mode oracle harness): UPDATE output
-    * mode + `foreachBatch` upsert into a keyed store. Update mode emits
-    * only the words whose counts changed in a micro-batch — complete mode
-    * re-emits the entire vocabulary every batch, which is sink-write
-    * amplification proportional to vocabulary size, not to batch size.
-    *
-    * The keyed store here is log-structured parquet (each batch appends its
-    * changed rows stamped with the batch id; [[readWordStore]] merges on
-    * read by taking each word's row from the highest batch id) — the
-    * offline stand-in for a real keyed sink (Delta MERGE, HBase/Cassandra
-    * upsert, or a compacting topic). Batch-id stamping also makes the
-    * upsert idempotent under foreachBatch's at-least-once replay: a
-    * re-delivered batch rewrites the same (word, batch_id, cnt) rows, and
-    * merge-on-read collapses them.
+    * [[wordCountsToBatch]]'s complete-mode oracle harness): update output
+    * mode upserting into the log-structured keyed store of
+    * [[EventStreams.upsertToStore]], merged on read — the registered
+    * production-shaped wordcount (same oracle as mr_wordcount: a full
+    * drain's merged store equals the batch counts).
     */
-  def wordCountsUpdateToStore(docs: DataFrame, storeDir: String, ckptDir: String): Unit = {
-    val counts = graft.operators.WordCount.counts(docs, "text")
-    EventStreams.withStreamShufflePartitions(counts.sparkSession) {
-      val q = counts.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(storeDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
-
-  /** Schema of the log-structured word store's parquet rows. */
-  private val storeSchema: StructType = StructType(Seq(
-    StructField("word", StringType),
-    StructField("cnt", LongType),
-    StructField("batch_id", LongType)))
-
-  /** One store row per word, resolved to its highest batch id — the shared
-    * merge kernel of [[readWordStore]] and [[compactWordStore]].
-    */
-  private def mergedStore(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.schema(storeSchema).parquet(storeDir)
-      .groupBy("word")
-      .agg(max(struct(col("batch_id"), col("cnt"))).as("s"))
-      .select(col("word"), col("s.cnt").as("cnt"), col("s.batch_id").as("batch_id"))
-
-  /** Merge-on-read over the log-structured word store: each word's count
-    * from its highest batch id (`max(struct(batch_id, cnt))` — one
-    * hash-agg, distributed; nothing driver-side). This is the read half of
-    * the [[wordCountsUpdateToStore]] upsert contract.
-    */
-  def readWordStore(spark: SparkSession, storeDir: String): DataFrame =
-    mergedStore(spark, storeDir).select("word", "cnt")
-
-  /** LSM-style compaction of the word store: rewrite the update log to one
-    * row per word, PRESERVING each word's batch_id so updates appended
-    * after compaction (necessarily higher batch ids) still win the
-    * merge-on-read. Run it between drains, not concurrently with one —
-    * the directory swap below is the offline stand-in for a transactional
-    * table format's atomic commit (Delta/Iceberg in production), where
-    * this whole function is a MERGE + OPTIMIZE.
-    */
-  def compactWordStore(spark: SparkSession, storeDir: String): Unit = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_wcstore_compact")
-    mergedStore(spark, storeDir).write.mode("overwrite").parquet(staged.toString)
-    // swap: clear the log dir, move the compacted files in (same-FS move
-    // for the temp-dir harness; a cluster deployment swaps a table pointer)
-    val dir = java.nio.file.Paths.get(storeDir)
-    val oldFiles = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      oldFiles.iterator().asScala.toList.foreach(p =>
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.toList.foreach(java.nio.file.Files.delete))
-    } finally oldFiles.close()
-    val newFiles = java.nio.file.Files.list(staged)
-    try {
-      import scala.jdk.CollectionConverters._
-      newFiles.iterator().asScala.toList.foreach(p =>
-        java.nio.file.Files.move(p, dir.resolve(p.getFileName.toString)))
-    } finally newFiles.close()
-    java.nio.file.Files.delete(staged)
-  }
-
-  /** [[wordCountsUpdateToStore]] + [[readWordStore]] over the driver's
-    * documents dir — the registered production-shaped wordcount (same
-    * oracle as mr_wordcount: a full drain's merged store equals the batch
-    * counts).
-    */
-  def wordCountsViaKeyedStore(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_wcstore")
-    // an empty stream never fires foreachBatch: pre-create the store dir so
-    // the read-back sees a legal (empty) store instead of a missing path
-    java.nio.file.Files.createDirectories(tmp.resolve("store"))
-    wordCountsUpdateToStore(rawSource(spark, dir), s"$tmp/store", s"$tmp/ckpt")
-    val result = readWordStore(spark, s"$tmp/store")
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
-  }
+  def wordCountsViaKeyedStore(spark: SparkSession, dir: String): DataFrame =
+    EventStreams.upsertDrain(
+      graft.operators.WordCount.counts(rawSource(spark, dir), "text"), "word")
 
   /** STREAMING A-ES sample maintenance — the continuously-updated exact-k
     * weighted sample. Bottom-k is a MONOID: the global bottom-k equals
     * the bottom-k of the union of per-batch bottom-ks (any globally
     * selected row is necessarily in its own batch's bottom-k), so each
-    * micro-batch contributes only its OWN ≤k key rows (batch-stamped,
-    * idempotent under foreachBatch's at-least-once replay — a redelivered
-    * batch rewrites identical rows, collapsed by the group-by on read) to
-    * a log-structured store, and merge-on-read resolves the running
-    * sample. Per-batch cost is one shard scan + a k-row heap; store
-    * growth is ≤ k rows per batch, never corpus-proportional. A full
-    * drain equals the batch [[graft.operators.Sampling
-    * .weightedExactSample]] exactly — shared oracle verbatim.
+    * micro-batch contributes only its OWN ≤k key rows and the bottom-k of
+    * their union is the running sample. Per-batch cost is one shard scan
+    * + a k-row heap; the sink grows by ≤ k rows per batch, never
+    * corpus-proportional. A full drain equals the batch
+    * [[graft.operators.Sampling.weightedExactSample]] exactly — shared
+    * oracle verbatim.
     */
   def aesSampleToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sampling
     val k = Sampling.AesTarget.toInt
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_aes")
-    java.nio.file.Files.createDirectories(tmp.resolve("store"))
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = rawSource(spark, dir).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Sampling.weightedExactSample(batch, k)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$tmp/store")
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val storeSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("weight", LongType),
-      StructField("key_f", LongType), StructField("batch_id", LongType)))
-    val result = spark.read.schema(storeSchema).parquet(s"$tmp/store")
-      .groupBy("doc_id", "weight", "key_f").agg(max("batch_id").as("b"))
+    EventStreams.probeToBatch(rawSource(spark, dir))(Sampling.weightedExactSample(_, k))
       .orderBy(col("key_f").asc, col("doc_id").asc)
       .limit(k)
-      .select("doc_id", "weight", "key_f")
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
   }
 
   /** Run the dedup topology over the driver's documents dir to completion
@@ -243,15 +125,8 @@ object DocumentStreams {
     * the corpus — deterministic and oracle-checkable (the batch twin's
     * GROUP BY keys).
     */
-  def dedupToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_docdedup")
-    val out = deduped(source(spark, dir))
-    val result = EventStreams
-      .drainAppendToParquet(spark, out, s"$tmp/out", s"$tmp/ckpt")
-      .select("fp_md5")
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
-  }
+  def dedupToBatch(spark: SparkSession, dir: String): DataFrame =
+    EventStreams.probeToBatch(deduped(source(spark, dir)))(identity).select("fp_md5")
 
   /** Ingest-time QUALITY + PII gate — the streaming twin of the retention
     * pipeline's stage 1 plus the PII scan: admit a document only if it has
@@ -303,34 +178,21 @@ object DocumentStreams {
     */
   def dlqSplitToBatch(spark: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dlq")
-    val (main, dlq) = (tmp.resolve("main"), tmp.resolve("dlq"))
-    java.nio.file.Files.createDirectories(main)
+    val dlq = tmp.resolve("dlq")
     java.nio.file.Files.createDirectories(dlq)
     val annotated = rawSource(spark, dir).withColumn("reason", rejectionReason)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = annotated.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val b = batch.persist()
-          try {
-            b.where(col("reason").isNull)
-              .select("doc_id", "lang", "source")
-              .write.mode("overwrite").parquet(s"$main/batch=$id")
-            b.where(col("reason").isNotNull)
-              .select("doc_id", "lang", "source", "reason")
-              .write.mode("overwrite").parquet(s"$dlq/batch=$id")
-          } finally { b.unpersist(); () }
-        }
-        .start()
-      q.awaitTermination()
+    def admitted(b: DataFrame) =
+      b.where(col("reason").isNull).select("doc_id", "lang", "source")
+    def rejected(b: DataFrame) =
+      b.where(col("reason").isNotNull).select("doc_id", "lang", "source", "reason")
+    EventStreams.runStream(annotated, "append") { (batch, id) =>
+      val b = batch.persist()
+      try {
+        admitted(b).write.mode("overwrite").parquet(s"$tmp/main/batch=$id")
+        rejected(b).write.mode("overwrite").parquet(s"$dlq/batch=$id")
+      } finally b.unpersist()
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("reason", org.apache.spark.sql.types.StringType)))
-    val result = spark.read.schema(schema)
+    val result = spark.read.schema(rejected(annotated).schema)
       .option("recursiveFileLookup", "true").parquet(dlq.toString)
     EventStreams.deleteRecursivelyOnExit(tmp)
     result
@@ -339,15 +201,8 @@ object DocumentStreams {
   /** Run the quality gate over the driver's documents dir to completion
     * and read back the admitted rows (append + exactly-once parquet sink).
     */
-  def qualityFilteredToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_docquality")
-    val out = qualityFiltered(rawSource(spark, dir))
-    val result = EventStreams
-      .drainAppendToParquet(spark, out, s"$tmp/out", s"$tmp/ckpt")
-      .select("doc_id", "lang", "source")
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
-  }
+  def qualityFilteredToBatch(spark: SparkSession, dir: String): DataFrame =
+    EventStreams.probeToBatch(rawSource(spark, dir))(qualityFiltered)
 
   /** STREAMING incremental winnow overlap — `Dedup.incrementalWinnowOverlap`
     * running as continuous ingestion: the corpus's capped fingerprint
@@ -355,8 +210,7 @@ object DocumentStreams {
     * frames (`Dedup.winnowCorpusArtifacts`); each arriving micro-batch
     * computes its own winnow selection and probes through the SHARED
     * `Dedup.winnowProbe`, so the stream reports the batch twin's exact
-    * shard-vs-corpus pair set (shared oracle). Per-batch `batch=<id>`
-    * overwrite dirs: idempotent under replay, exactly-once in the log.
+    * shard-vs-corpus pair set (shared oracle).
     */
   def incrementalWinnowOverlapToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
@@ -366,34 +220,8 @@ object DocumentStreams {
       case Some(split) =>
         val (hot, index, nCorpus) = Dedup.winnowCorpusArtifacts(
           docs.where(col("doc_id") < split), Dedup.WinnowBucketCap)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_winnow")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              Dedup.winnowProbe(batch, hot, index, nCorpus, Dedup.WinnowMinShared)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("corpus_doc", LongType),
-          StructField("n_shared", LongType),
-          StructField("n_doc", LongType),
-          StructField("n_corpus", LongType),
-          StructField("overlap_milli", LongType)))
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(
+          Dedup.winnowProbe(_, hot, index, nCorpus, Dedup.WinnowMinShared))
     }
   }
 
@@ -405,39 +233,10 @@ object DocumentStreams {
     * micro-batch runs the SHARED batch operator on itself and the union
     * over any batch partitioning equals the batch answer row for row —
     * the whole table streams (no ingest split) and the query shares
-    * `q_repetition_excised`'s oracle verbatim. Per-batch `batch=<id>`
-    * overwrite dirs: idempotent under replay, exactly-once in the log.
+    * `q_repetition_excised`'s oracle verbatim.
     */
-  def repetitionExciseToBatch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_repetition")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    val stream = rawSource(spark, dir)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Dedup.repetitionExcise(batch)
-            .write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_lines", LongType),
-      StructField("n_lines_dropped", LongType),
-      StructField("n_tokens_dropped", LongType),
-      StructField("kept_md5", StringType)))
-    val result = spark.read.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
-  }
+  def repetitionExciseToBatch(spark: SparkSession, dir: String): DataFrame =
+    EventStreams.probeToBatch(rawSource(spark, dir))(graft.operators.Dedup.repetitionExcise(_))
 
   /** STREAMING HTML main-content extraction —
     * `Html.extractionReport` as continuous ingestion (the position a
@@ -445,100 +244,39 @@ object DocumentStreams {
     * text leaves). Extraction is DOCUMENT-LOCAL (one page in, one report
     * out — no corpus state at all), so like the repetition twin each
     * micro-batch runs the SHARED batch operator on itself and the union
-    * over any batch partitioning equals the batch answer row for row;
-    * shares `q_html_extract`'s oracle verbatim. Per-batch `batch=<id>`
-    * overwrite dirs: idempotent under replay, exactly-once in the log.
+    * over any batch partitioning equals the batch answer row for row.
+    * The markup fixtures are their own final shard, unioned on exactly
+    * once, so the result matches the batch report (whose corpus is
+    * documents ∪ fixtures) and shares `q_html_extract`'s oracle verbatim.
     */
   def htmlExtractToBatch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_html")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    val stream = rawSource(spark, dir)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.operators.Html.extractionReportRaw(
-            batch.select("doc_id", "source", "text"))
-            .write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    // the markup fixtures arrive as their own final shard — exactly once
-    // across the whole stream, so the union matches the batch report
-    // (whose corpus is documents ∪ fixtures) row for row
-    locally {
-      import spark.implicits._
-      graft.operators.Html.extractionReportRaw(
-        graft.operators.Html.MarkupFixtures.toDF("doc_id", "source", "text"))
-        .write.mode("overwrite")
-        .parquet(tmp.resolve("out").resolve("batch=fixtures").toString)
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_paras", LongType),
-      StructField("main_chars", LongType),
-      StructField("roundtrip_ok", BooleanType)))
-    val result = spark.read.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
+    import graft.operators.Html
+    import spark.implicits._
+    def report(pages: DataFrame) =
+      Html.extractionReportRaw(pages.select("doc_id", "source", "text"))
+    EventStreams.probeToBatch(rawSource(spark, dir))(report)
+      .unionByName(report(Html.MarkupFixtures.toDF("doc_id", "source", "text")))
   }
 
   /** STREAMING host-link-graph ingestion — `LinkGraph.hostEdges` built
     * continuously: anchor PARSING is document-local (page in, anchor
     * rows out — the shared `linksRaw`), so each micro-batch extracts its
-    * own links and appends them; the cross-host edge AGGREGATION is the
-    * one corpus-level step and runs once over the drained anchor log
-    * through the SHARED `edgesFromLinks`, exactly how a crawl pipeline
-    * accumulates its webgraph (per-fetch link records, periodic graph
-    * rollup). Fixtures arrive as their own final shard (the [[Html]]
-    * streaming convention), so the rollup equals the batch edge list row
-    * for row and shares `q_link_hosts`' oracle verbatim. Per-batch
-    * `batch=<id>` overwrite dirs: idempotent under replay.
+    * own links; the cross-host edge AGGREGATION is the one corpus-level
+    * step and runs once over the drained anchor log through the SHARED
+    * `edgesFromLinks`, exactly how a crawl pipeline accumulates its
+    * webgraph (per-fetch link records, periodic graph rollup). Fixtures
+    * are unioned on as their own final shard (the [[htmlExtractToBatch]]
+    * convention), so the rollup equals the batch edge list row for row
+    * and shares `q_link_hosts`' oracle verbatim.
     */
   def linkHostsToBatch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    import graft.operators.LinkGraph
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_links")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    val stream = rawSource(spark, dir)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          LinkGraph.linksRaw(batch.select("doc_id", "source", "text"))
-            .write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    locally {
-      import spark.implicits._
-      LinkGraph.linksRaw(
-        graft.operators.Html.MarkupFixtures.toDF("doc_id", "source", "text"))
-        .write.mode("overwrite")
-        .parquet(tmp.resolve("out").resolve("batch=fixtures").toString)
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("src_host", StringType),
-      StructField("dst_host", StringType),
-      StructField("dst_page", LongType),
-      StructField("absolute", BooleanType)))
-    val anchors = spark.read.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    LinkGraph.edgesFromLinks(anchors)
+    import graft.operators.{Html, LinkGraph}
+    import spark.implicits._
+    // anchor_text is never read by the rollup: the sink does not carry it
+    def links(pages: DataFrame) =
+      LinkGraph.linksRaw(pages.select("doc_id", "source", "text")).drop("anchor_text")
+    LinkGraph.edgesFromLinks(EventStreams.probeToBatch(rawSource(spark, dir))(links)
+      .unionByName(links(Html.MarkupFixtures.toDF("doc_id", "source", "text"))))
   }
 
   /** STREAMING benchmark-contamination gate —
@@ -553,32 +291,8 @@ object DocumentStreams {
     import graft.operators.Dedup
     val docs = graft.Tables.documents(spark, dir)
     val evalGrams = Dedup.corpusContaminationIndex(docs, Dedup.evalSample(docs))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_contam")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    val stream = rawSource(spark, dir)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          Dedup.contaminationProbe(batch, evalGrams, k = 8,
-              minShared = Dedup.ContamMinShared)
-            .write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("eval_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("shared_ngrams", org.apache.spark.sql.types.LongType)))
-    val result = spark.read.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
+    EventStreams.probeToBatch(rawSource(spark, dir))(
+      Dedup.contaminationProbe(_, evalGrams, k = 8, minShared = Dedup.ContamMinShared))
   }
 
   /** STREAMING incremental DOMAIN token budget —
@@ -589,8 +303,7 @@ object DocumentStreams {
     * own urls/hashes and probes through the SHARED
     * `Domains.budgetProbe`, so admission verdicts depend only on the
     * frozen spend and the union over batches equals the batch twin row
-    * for row (shared oracle). Per-batch `batch=<id>` overwrite dirs —
-    * the standard exactly-once contract of this file's sinks.
+    * for row (shared oracle).
     */
   def incrementalDomainBudgetToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Domains}
@@ -602,34 +315,9 @@ object DocumentStreams {
           .budgetFrame(docs.where(col("doc_id") < split), Domains.DomainBudgetSeed)
           .localCheckpoint()
         val spend = Domains.frozenSpend(corpus)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dombudget")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              Domains.budgetProbe(
-                  Domains.budgetFrame(batch, Domains.DomainBudgetSeed),
-                  spend, corpus, Domains.DomainBudgetTokens)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("domain", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("tok", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("admitted", org.apache.spark.sql.types.BooleanType)))
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(b =>
+          Domains.budgetProbe(Domains.budgetFrame(b, Domains.DomainBudgetSeed),
+            spend, corpus, Domains.DomainBudgetTokens))
     }
   }
 
@@ -641,8 +329,6 @@ object DocumentStreams {
     * the rollup runs once post-drain. Verdicts are probe-only against
     * the artifacts (no shard-internal pairs), so the union over batches
     * equals the batch twin row for row and both share one oracle.
-    * Per-batch `batch=<id>` overwrite dirs — this file's exactly-once
-    * sink contract.
     */
   def trustFunnelToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Pipeline, SignatureStore}
@@ -652,32 +338,9 @@ object DocumentStreams {
       case Some(split) =>
         val arts = Pipeline.funnelArtifacts(
           docs, split, Some(SignatureStore.table(spark, dir)), 0.5)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_funnel")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              Pipeline.scoreShardAgainstFunnel(batch, arts)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("verdict", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_toks", org.apache.spark.sql.types.LongType)))
-        val perDoc = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        Pipeline.funnelRollup(perDoc)
+        Pipeline.funnelRollup(EventStreams.probeToBatch(
+          rawSource(spark, dir).where(col("doc_id") >= split))(
+          Pipeline.scoreShardAgainstFunnel(_, arts)))
     }
   }
 
@@ -688,9 +351,7 @@ object DocumentStreams {
     * localCheckpointed; each arriving micro-batch chops its own lines and
     * excises against the index through the SHARED
     * `Dedup.excisionReport`/`linesOf` pieces, so the stream answers with
-    * the batch twin's exact report (shared oracle). Per-batch
-    * `batch=<id>` overwrite dirs: idempotent under replay, exactly-once
-    * in the log — the standard contract of this file's sinks.
+    * the batch twin's exact report (shared oracle).
     */
   def incrementalLineDedupToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
@@ -701,33 +362,8 @@ object DocumentStreams {
         val idx = Dedup.corpusLineIndex(
           Dedup.linesOf(docs.where(col("doc_id") < split), Dedup.LineLen),
           Dedup.LineMinOccurrences).localCheckpoint()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_linededup")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              Dedup.excisionReport(Dedup.linesOf(batch, Dedup.LineLen), idx)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_lines", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_lines_dropped", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_tokens_dropped", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("kept_md5", org.apache.spark.sql.types.StringType)))
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(b =>
+          Dedup.excisionReport(Dedup.linesOf(b, Dedup.LineLen), idx))
     }
   }
 
@@ -737,9 +373,7 @@ object DocumentStreams {
     * documents probes it through the SAME `novelProbe` the batch twin
     * uses. Per-document verdicts depend only on the frozen index, so the
     * union over micro-batches equals the batch answer row for row and
-    * both share one oracle. Idempotent per batch id (each batch
-    * overwrites its own `batch=<id>` directory), like the other
-    * incremental sinks.
+    * both share one oracle.
     */
   def ngramNoveltyToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, TextAnalysis}
@@ -752,32 +386,8 @@ object DocumentStreams {
         val idx = TextAnalysis
           .corpusNgramIndex(docs.where(col("doc_id") < split))
           .localCheckpoint()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_novelty")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              TextAnalysis.novelProbe(batch, idx)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_ngrams", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_novel", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("novelty_milli", org.apache.spark.sql.types.LongType)))
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(
+          TextAnalysis.novelProbe(_, idx))
     }
   }
 
@@ -789,11 +399,7 @@ object DocumentStreams {
     * so per-batch batch-semantics inside foreachBatch need no cross-batch
     * state — a shard doc is processed in exactly one batch, and the
     * contract is shard-vs-CORPUS pairs only, exactly like the batch twin,
-    * whose oracle this query shares verbatim). Each micro-batch overwrites
-    * its own `batch=<id>` directory, so a batch retried after a crash
-    * replaces rather than duplicates its pairs — idempotent per batch id,
-    * which with the checkpointed batch ids gives exactly-once in the log
-    * (the same contract as the DLQ and HLL-register sinks).
+    * whose oracle this query shares verbatim).
     */
   def incrementalNearDupsToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
@@ -811,35 +417,8 @@ object DocumentStreams {
         // the whole probe bundle frozen before the micro-batch loop —
         // a per-batch probe does zero corpus-side recomputation
         val cdx = Dedup.corpusBandIndexFromTable(corpusTbl).materialized
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_incdedup")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-              Dedup.probeCorpusIndex(Dedup.shingled(batch), cdx, 0.5)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("corpus_doc", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("shard_doc", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("inter", org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("uni", org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))
-        // recursiveFileLookup: read across the per-batch directories without
-        // partition inference, so `batch=` never becomes a result column.
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(b =>
+          Dedup.probeCorpusIndex(Dedup.shingled(b), cdx, 0.5))
     }
   }
 
@@ -847,13 +426,11 @@ object DocumentStreams {
     * `Dsir.incrementalScores` — the corpus's bucket-weight table is the
     * FROZEN artifact (trained once below the ingest split,
     * localCheckpointed), and each incoming micro-batch is scored against
-    * it inside foreachBatch through the SHARED
-    * `Dsir.scoreShardAgainstWeights`, so the stream answers with the batch
-    * operator's exact semantics. Stateless across batches (the weights
-    * never move mid-stream — retraining is a batch-side decision);
-    * per-batch overwrite dirs make the sink idempotent under replays
-    * (exactly-once output). A full AvailableNow drain therefore equals the
-    * batch twin row-for-row — the oracle is shared verbatim.
+    * it through the SHARED `Dsir.scoreShardAgainstWeights`, so the stream
+    * answers with the batch operator's exact semantics. Stateless across
+    * batches (the weights never move mid-stream — retraining is a
+    * batch-side decision), so a full drain equals the batch twin
+    * row-for-row — the oracle is shared verbatim.
     */
   def dsirScoresToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Dsir}
@@ -867,32 +444,8 @@ object DocumentStreams {
           .featureBuckets(docs.where(col("doc_id") < split)).localCheckpoint()
         val weights = Dsir.bucketWeights(corpusFb).localCheckpoint()
         val lamDefault = Dsir.lamDefaultOf(corpusFb).localCheckpoint()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dsir")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              Dsir.scoreShardAgainstWeights(batch, weights, lamDefault)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("source", StringType),
-          StructField("n_feats", LongType),
-          StructField("logw_f", LongType)))
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(
+          Dsir.scoreShardAgainstWeights(_, weights, lamDefault))
     }
   }
 
@@ -904,8 +457,7 @@ object DocumentStreams {
     * SHARED `Splits.assignArrivals` tail — matched docs inherit their
     * corpus cluster's split, the rest hash-split as singletons, all
     * within the batch (a doc arrives exactly once; no cross-batch
-    * state). Per-batch overwrite dirs make the sink idempotent under
-    * replay; a full drain equals the batch twin row-for-row, oracle
+    * state), so a full drain equals the batch twin row-for-row, oracle
     * shared verbatim.
     */
   def leakFreeSplitsToBatch(spark: SparkSession, dir: String): DataFrame = {
@@ -937,36 +489,9 @@ object DocumentStreams {
           .select(col("doc_id").as("corpus_doc"),
             col("cluster_id"), col("split"))
           .localCheckpoint()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_lfs")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              Splits.assignArrivals(
-                batch,
-                Dedup.probeCorpusIndex(
-                  Dedup.shingled(batch), cdx, 0.5),
-                corpusAssign)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("cluster_id", LongType),
-          StructField("split", StringType),
-          StructField("inherited", BooleanType)))
-        val result = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        result
+        EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(b =>
+          Splits.assignArrivals(
+            b, Dedup.probeCorpusIndex(Dedup.shingled(b), cdx, 0.5), corpusAssign))
     }
   }
 
@@ -977,55 +502,30 @@ object DocumentStreams {
     * retraining is a batch-side decision, never a mid-stream drift), and
     * each micro-batch scores through the SHARED
     * `TextAnalysis.nbScoreAgainst`, so the stream answers with the batch
-    * operator's exact semantics. Scoring is per-document, a doc arrives in
-    * exactly one batch, and per-batch overwrite dirs make the sink
-    * idempotent under replays — a full AvailableNow drain equals the batch
-    * twin row-for-row, oracle shared verbatim. This is the learned
-    * upgrade of the fixed-rule streaming quality+PII gate.
+    * operator's exact semantics. Scoring is per-document and a doc
+    * arrives in exactly one batch, so a full drain equals the batch twin
+    * row-for-row, oracle shared verbatim. This is the learned upgrade of
+    * the fixed-rule streaming quality+PII gate.
     */
   def nbScoresToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
     val docs = graft.Tables.documents(spark, dir)
     val model = TextAnalysis.nbTrain(docs).localCheckpoint()
     val consts = TextAnalysis.nbConsts(docs, model).localCheckpoint()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_nb")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = rawSource(spark, dir).writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          TextAnalysis.nbScoreAgainst(batch, model, consts)
-            .write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_tokens", LongType),
-      StructField("score_f", LongType),
-      StructField("nb_quality", BooleanType)))
-    val result = spark.read.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
+    EventStreams.probeToBatch(rawSource(spark, dir))(
+      TextAnalysis.nbScoreAgainst(_, model, consts))
   }
 
   /** STREAMING anchor-context indexing — the continuous-crawl form of
     * `AnchorStore.anchorCtxBm25Incremental`: the PERSISTED base-crawl
     * context index is the frozen artifact; each arriving micro-batch
     * parses ONLY its own pages (`anchorContextTermIndexShard` — no
-    * fixtures, those live in the base index) and appends its partial
+    * fixtures, those live in the base index) into partial
     * (host, tok, tf) counts; the post-drain rollup sums the base index
     * with every batch's partials and scores once with the shared BM25
     * tail. tf is additive and page extraction row-local, so batches
     * compose exactly: stream ≡ incremental ≡ full rebuild, one oracle
-    * for all three. Per-batch `batch=<id>` overwrite dirs — this file's
-    * exactly-once sink contract.
+    * for all three.
     */
   def anchorCtxToBatch(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{AnchorStore, Dedup, LinkGraph}
@@ -1034,33 +534,11 @@ object DocumentStreams {
       case None => AnchorStore.anchorCtxBm25Hosts(spark, dir) // empty corpus
       case Some(split) =>
         val base = AnchorStore.ctxBaseIndex(spark, dir, split)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_anchorctx")
-        java.nio.file.Files.createDirectories(tmp.resolve("out"))
-        val stream = rawSource(spark, dir).where(col("doc_id") >= split)
-        EventStreams.withStreamShufflePartitions(spark) {
-          val q = stream.writeStream
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              LinkGraph.anchorContextTermIndexShard(batch)
-                .write.mode("overwrite")
-                .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-              ()
-            }
-            .start()
-          q.awaitTermination()
-        }
-        val schema = StructType(Seq(
-          StructField("host", StringType),
-          StructField("tok", StringType),
-          StructField("tf", LongType)))
-        val partials = spark.read.schema(schema)
-          .option("recursiveFileLookup", "true")
-          .parquet(tmp.resolve("out").toString)
-        EventStreams.deleteRecursivelyOnExit(tmp)
-        val merged = base.unionByName(partials)
-          .groupBy("host", "tok").agg(sum("tf").as("tf"))
-        LinkGraph.anchorBm25FromIndex(merged)
+        val partials = EventStreams.probeToBatch(
+          rawSource(spark, dir).where(col("doc_id") >= split))(
+          LinkGraph.anchorContextTermIndexShard)
+        LinkGraph.anchorBm25FromIndex(base.unionByName(partials)
+          .groupBy("host", "tok").agg(sum("tf").as("tf")))
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.operators.Similarity
 
@@ -31,21 +31,13 @@ object EmbeddingStreams {
     * batch operator uses. Verdicts are per-vector (no cross-batch state:
     * a vector is decided in exactly one batch, and the contract is
     * shard-vs-CORPUS only, exactly like the batch twin whose oracle this
-    * query shares verbatim). Each micro-batch overwrites its own
-    * `batch=<id>` directory — a batch retried after a crash replaces
-    * rather than duplicates its verdicts, the same idempotent-sink
-    * exactly-once recipe as the DLQ and HLL-register sinks.
+    * query shares verbatim).
     */
   def semDeDupIncrementalToBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-    val outSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("cell", IntegerType),
-      StructField("kept", BooleanType)))
     val mx = emb.agg(max(col("vec_id"))).head()
     if (mx.isNullAt(0)) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+      return emb.select(col("vec_id"), lit(0).as("cell"), lit(true).as("kept")).limit(0)
     }
     val split = (mx.getLong(0) + 1L) * 4L / 5L
     val corpus = emb.where(col("vec_id") < split)
@@ -53,36 +45,16 @@ object EmbeddingStreams {
     val index =
       if (cents.isEmpty) None
       else Some(Similarity.corpusCellIndex(corpus, cents).localCheckpoint())
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_semdedup")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    val stream = rawSource(spark, dir).where(col("vec_id") >= split)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val arrived = batch.where(col("embedding").isNotNull)
-          val verdicts = index match {
-            case Some(reps) =>
-              val cells = Similarity.shardCellsOf(arrived, cents).localCheckpoint()
-              Similarity.probeCellIndex(cells, reps, threshold = 0.45)
-            case None => // first batch ever: nothing to collide with
-              arrived.select(col("vec_id"), lit(0).as("cell"), lit(true).as("kept"))
-          }
-          verdicts.write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    EventStreams.probeToBatch(rawSource(spark, dir).where(col("vec_id") >= split)) { b =>
+      val arrived = b.where(col("embedding").isNotNull)
+      index match {
+        case Some(reps) =>
+          val cells = Similarity.shardCellsOf(arrived, cents).localCheckpoint()
+          Similarity.probeCellIndex(cells, reps, threshold = 0.45)
+        case None => // first batch ever: nothing to collide with
+          arrived.select(col("vec_id"), lit(0).as("cell"), lit(true).as("kept"))
+      }
     }
-    // recursiveFileLookup: read across per-batch dirs without partition
-    // inference, so `batch=` never becomes a result column
-    val result = spark.read.schema(outSchema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    result
   }
 
   /** STREAMING embedding-drift monitor: each micro-batch of the incoming
@@ -91,14 +63,10 @@ object EmbeddingStreams {
     * monitoring signal); the drained counts sum into the shard histogram
     * and compose with the corpus histogram through the SHARED
     * `Similarity.driftCardOf`, so a full drain emits exactly the batch
-    * operator's card. Stateless across batches; per-batch overwrite dirs
-    * keep the sink idempotent under replays.
+    * operator's card. Stateless across batches.
     */
   def embeddingDriftToBatch(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-    val outSchema = StructType(Seq(
-      StructField("cell", IntegerType),
-      StructField("n_shard", LongType)))
     def emptyCard: DataFrame = {
       import spark.implicits._
       Seq.empty[(Int, Long, Long, Long, Long, Long)].toDF(
@@ -113,30 +81,10 @@ object EmbeddingStreams {
     if (cents.isEmpty) return emptyCard
     val corpusHist = Similarity.cellHistogram(corpus, cents, "n_corpus")
       .localCheckpoint()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_embdrift")
-    java.nio.file.Files.createDirectories(tmp.resolve("out"))
-    val stream = rawSource(spark, dir).where(col("vec_id") >= split)
-    EventStreams.withStreamShufflePartitions(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Similarity
-            .cellHistogram(
-              batch.where(col("embedding").isNotNull), cents, "n_shard")
-            .write.mode("overwrite")
-            .parquet(tmp.resolve("out").resolve(s"batch=$batchId").toString)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    val shardHist = spark.read.schema(outSchema)
-      .option("recursiveFileLookup", "true")
-      .parquet(tmp.resolve("out").toString)
+    val shardHist = EventStreams
+      .probeToBatch(rawSource(spark, dir).where(col("vec_id") >= split))(b =>
+        Similarity.cellHistogram(b.where(col("embedding").isNotNull), cents, "n_shard"))
       .groupBy("cell").agg(sum("n_shard").as("n_shard"))
-    val card = Similarity.driftCardOf(corpusHist, shardHist)
-    EventStreams.deleteRecursivelyOnExit(tmp)
-    card
+    Similarity.driftCardOf(corpusHist, shardHist)
   }
 }

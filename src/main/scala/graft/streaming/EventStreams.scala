@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -13,9 +13,10 @@ import org.apache.spark.sql.types._
   *
   * At scale this is the standard continuous-ingest topology: file/Kafka
   * source → event-time window aggs with watermarked state → sink. Here the
-  * source is the driver's events parquet and the sink is an in-memory table
-  * so Verify can oracle-check the result; swapping source/sink strings is
-  * the only change for a real deployment.
+  * source is the events parquet and every twin drains through
+  * the one runner below ([[runStream]]) and is read back as a batch frame
+  * so Verify can oracle-check the result; swapping the source and the
+  * trigger is the only change for a real deployment.
   */
 object EventStreams {
 
@@ -121,12 +122,8 @@ object EventStreams {
     * max(ts) sits ≥ 35 s away from a half-hour boundary — four orders of
     * magnitude past the watermark's ms truncation.
     */
-  def slidingStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sliding")
-    val out = runAppendToFiles(spark, dir, slidingStats, s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def slidingStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    probeToBatch(slidingStats(source(spark, dir)))(identity)
 
   /** Event-time session windows (30-minute gap) per user — the streaming
     * generalization of the batch gaps-and-islands sessionization.
@@ -157,104 +154,155 @@ object EventStreams {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Run a streaming aggregation over the driver's events table to
-    * completion (Trigger.AvailableNow) and return the final result as a
-    * batch DataFrame. Complete output mode flushes every window at the end,
-    * so the result is exactly the batch answer — which is what makes this
+  /** The one stream runner: drain `stream` from the caller's session with
+    * `Trigger.AvailableNow` in `outputMode`, handing every micro-batch and
+    * its id to `body`. It owns the temp checkpoint (where the batch ids are
+    * committed) and the [[withStreamShufflePartitions]] scope, which covers
+    * `awaitTermination` because batch planning reads the conf
+    * asynchronously after `start()` returns. Swap the trigger for a
+    * processing-time one on a continuous feed; nothing else changes.
+    */
+  private[streaming] def runStream(stream: DataFrame, outputMode: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
+    withStreamShufflePartitions(stream.sparkSession) {
+      stream.writeStream
+        .outputMode(outputMode)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(body)
+        .start()
+        .awaitTermination()
+    }
+    deleteRecursivelyOnExit(ckpt)
+  }
+
+  /** Append-mode drain of `stream` through `perBatch`, read back as one
+    * batch frame — every `*ToBatch` twin's sink. `perBatch = identity` is
+    * the plain append drain; a probe twin passes its frozen-index probe,
+    * so each micro-batch is answered against static artifacts and the
+    * union over batches is the batch twin's answer.
+    *
+    * The exactly-once contract: each batch overwrites its own
+    * `batch=<id>` directory, and the ids are committed in the checkpoint,
+    * so a batch replayed after a crash replaces its rows instead of
+    * duplicating them. The read-back uses `recursiveFileLookup`, which
+    * skips partition inference, so `batch=` never becomes a column. Its
+    * schema is the one `perBatch` wrote; only when no batch fired (no
+    * input file) is `perBatch` applied once to an empty static frame of
+    * the stream's schema to get it, so non-empty input runs no extra job.
+    */
+  private[streaming] def probeToBatch(stream: DataFrame)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val spark = stream.sparkSession
+    val out = java.nio.file.Files.createTempDirectory("graft_stream_out")
+    var written: Option[StructType] = None
+    runStream(stream, "append") { (batch, id) =>
+      val rows = perBatch(batch)
+      written = Some(rows.schema)
+      rows.write.mode("overwrite").parquet(out.resolve(s"batch=$id").toString)
+    }
+    val schema = written.getOrElse(perBatch(spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), stream.schema)).schema)
+    val result = spark.read.schema(schema)
+      .option("recursiveFileLookup", "true").parquet(out.toString)
+    deleteRecursivelyOnExit(out)
+    result
+  }
+
+  /** Run a streaming aggregation over the events table to
+    * completion and return the final result as a batch DataFrame.
+    * Complete output mode flushes every window at the end, so the result
+    * is exactly the batch answer — which is what makes this
     * oracle-checkable from Verify.
     */
   def runToBatch(
       spark: SparkSession, dir: String,
-      transform: DataFrame => DataFrame,
-      queryName: String): DataFrame =
-    drainCompleteToBatch(spark, transform(source(spark, dir)), queryName)
+      transform: DataFrame => DataFrame): DataFrame =
+    drainCompleteToBatch(transform(source(spark, dir)))
 
-  /** The shared complete-mode drain (oracle harnesses only — the memory
-    * sink is a driver-side materialization by construction): run an
-    * arbitrary streaming frame to completion, copy the result out, drop
-    * the sink table. Lives in ONE place like [[drainAppendToParquet]].
+  /** The complete-mode drain (oracle harnesses only — the result is
+    * collected to the driver by construction): every batch re-emits the
+    * whole result, so the last batch's rows are the answer.
     */
-  private[streaming] def drainCompleteToBatch(
-      spark: SparkSession, out: DataFrame, queryName: String): DataFrame = {
-    // the scope covers awaitTermination: batch planning reads the conf
-    // asynchronously after start() returns
-    withStreamShufflePartitions(spark) {
-      val q = out
-        .writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // copy the result out and drop the sink table — the memory sink holds
-    // the full materialized result in the driver for the session lifetime
-    val sink = spark.table(queryName)
-    val result = spark.createDataFrame(
-      java.util.Arrays.asList(sink.collect(): _*), sink.schema)
-    spark.catalog.dropTempView(queryName)
-    result
+  private[streaming] def drainCompleteToBatch(out: DataFrame): DataFrame = {
+    var rows = Array.empty[Row]
+    runStream(out, "complete") { (batch, _) => rows = batch.collect() }
+    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** Oracle-checked streaming hourly stats (same oracle as q_events_hourly). */
   def hourlyStatsToBatch(spark: SparkSession, dir: String): DataFrame =
-    runToBatch(spark, dir, hourlyStats, s"stream_hourly_${System.nanoTime()}")
+    runToBatch(spark, dir, hourlyStats)
 
-  /** PRODUCTION streaming topology: append output mode + file sink. This —
-    * not [[runToBatch]] — is the shape that runs on an unbounded stream:
-    *
-    *   - append mode emits each window exactly once, when the watermark
-    *     passes its end, then EVICTS its state: state size is bounded by
-    *     (watermark horizon / window length) × key cardinality, never by
-    *     stream history (complete mode retains every window forever);
-    *   - the parquet sink writes distributed, exactly-once (checkpointed
-    *     file-manifest commit protocol) — nothing is collected on the
-    *     driver (the memory sink in [[runToBatch]] is a driver-side
-    *     materialization by construction, fine only as an oracle harness);
-    *   - `Trigger.AvailableNow` drains what exists and stops — swap for a
-    *     processing-time trigger for continuous ingest; nothing else
-    *     changes.
-    *
-    * Returns the path-backed result read back from the sink. Windows still
-    * inside the watermark horizon at end-of-input are NOT emitted — that is
-    * append-mode's contract (they could still receive late data), asserted
-    * against the batch answer + cutoff in the oracle and EventStreamsSpec.
+  /** Update-mode drain of a keyed aggregation into a log-structured
+    * parquet store. Update mode emits only the keys whose value changed in
+    * a micro-batch (complete mode would re-emit every key, sink-write
+    * amplification proportional to the key space, not the batch); each
+    * batch appends its rows stamped with its `batch_id`, and
+    * [[latestPerKey]] merges on read. The log is the offline stand-in for
+    * a real keyed sink (Delta MERGE, HBase/Cassandra upsert, a compacting
+    * topic). Batch-id stamping makes the upsert idempotent under replay: a
+    * re-delivered batch rewrites the same rows, and the merge collapses
+    * them.
     */
-  def runAppendToFiles(
-      spark: SparkSession, dir: String,
-      transform: DataFrame => DataFrame,
-      outPath: String, checkpointPath: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val out = transform(source(spark, dir, watermark))
-    drainAppendToParquet(spark, out, outPath, checkpointPath)
+  private[streaming] def upsertToStore(agg: DataFrame, storeDir: String): Unit =
+    runStream(agg, "update") { (batch, id) =>
+      batch.withColumn("batch_id", lit(id)).write.mode("append").parquet(storeDir)
+    }
+
+  /** Latest-batch-wins merge of an [[upsertToStore]] log: each key's row
+    * from its highest `batch_id` (`max(struct(batch_id, …))` — one
+    * hash-agg, distributed; nothing driver-side), `batch_id` kept so a
+    * [[compactStore]] can preserve it.
+    */
+  private[streaming] def latestPerKey(log: DataFrame, keys: String*): DataFrame = {
+    val values = log.columns.filterNot(c => c == "batch_id" || keys.contains(c))
+    log.groupBy(keys.map(col): _*)
+      .agg(max(struct(("batch_id" +: values).map(col): _*)).as("s"))
+      .select(keys.map(col) ++ values.map(v => col(s"s.$v")) :+ col("s.batch_id"): _*)
   }
 
-  /** The shared drain: run a streaming frame to completion in append mode
-    * against an exactly-once parquet sink, then read the result back.
-    * Used by every *ToBatch harness (events, sessions, document dedup,
-    * stream-stream attribution) so the sink/checkpoint/read-back contract
-    * lives in ONE place.
+  /** [[upsertToStore]] into a fresh temp store, read back latest batch per
+    * key — the stream twins of the sketch and word-count aggregations. The
+    * read schema is the aggregation's own: an empty stream fires no batch
+    * and leaves no file to infer it from.
     */
-  private[streaming] def drainAppendToParquet(
-      spark: SparkSession, out: DataFrame,
-      outPath: String, checkpointPath: String): DataFrame = {
-    // the scope covers awaitTermination: batch planning reads the conf
-    // asynchronously after start() returns
-    withStreamShufflePartitions(spark) {
-      val q = out
-        .writeStream
-        .format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", checkpointPath)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // explicit schema: an all-late/empty stream legally emits zero files,
-    // and schema inference over an empty sink dir would throw
-    spark.read.schema(out.schema).parquet(outPath)
+  private[streaming] def upsertDrain(agg: DataFrame, keys: String*): DataFrame = {
+    val store = java.nio.file.Files.createTempDirectory("graft_stream_store")
+    upsertToStore(agg, store.toString)
+    val log = agg.sparkSession.read
+      .schema(agg.schema.add("batch_id", LongType)).parquet(store.toString)
+    deleteRecursivelyOnExit(store)
+    latestPerKey(log, keys: _*).drop("batch_id")
+  }
+
+  /** LSM-style compaction of an [[upsertToStore]] log: rewrite it to one
+    * row per key, PRESERVING each key's batch_id so updates appended after
+    * compaction (necessarily higher batch ids) still win the merge. Run it
+    * between drains, not concurrently with one — the directory swap below
+    * is the offline stand-in for a transactional table format's atomic
+    * commit (Delta/Iceberg in production), where this whole function is a
+    * MERGE + OPTIMIZE.
+    */
+  private[streaming] def compactStore(spark: SparkSession, storeDir: String, keys: String*): Unit = {
+    import scala.jdk.CollectionConverters._
+    val staged = java.nio.file.Files.createTempDirectory("graft_store_compact")
+    latestPerKey(spark.read.parquet(storeDir), keys: _*)
+      .write.mode("overwrite").parquet(staged.toString)
+    // swap: clear the log dir, move the compacted files in (same-FS move
+    // for the temp-dir harness; a cluster deployment swaps a table pointer)
+    val dir = java.nio.file.Paths.get(storeDir)
+    val oldFiles = java.nio.file.Files.list(dir)
+    try oldFiles.iterator().asScala.toList.foreach(p =>
+      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.toList.foreach(java.nio.file.Files.delete))
+    finally oldFiles.close()
+    val newFiles = java.nio.file.Files.list(staged)
+    try newFiles.iterator().asScala.toList.foreach(p =>
+      java.nio.file.Files.move(p, dir.resolve(p.getFileName.toString)))
+    finally newFiles.close()
+    java.nio.file.Files.delete(staged)
   }
 
   /** Register `root` (and everything under it, recursively) for deletion at
@@ -271,16 +319,21 @@ object EventStreams {
     finally walk.close()
   }
 
-  /** Append-mode hourly stats over the driver's events dir, file-sinked to
-    * a temp dir. Oracle: the batch hourly aggregation restricted to windows
-    * whose end the final watermark (max event time − 1 h) passed.
+  /** PRODUCTION streaming topology: append-mode hourly stats over the
+    * events dir. This — not [[runToBatch]] — is the shape that
+    * runs on an unbounded stream: append mode emits each window exactly
+    * once, when the watermark passes its end, then EVICTS its state, so
+    * state size is bounded by (watermark horizon / window length) × key
+    * cardinality, never by stream history (complete mode retains every
+    * window forever), and nothing is collected on the driver.
+    *
+    * Windows still inside the watermark horizon at end-of-input are NOT
+    * emitted — that is append-mode's contract (they could still receive
+    * late data). Oracle: the batch hourly aggregation restricted to
+    * windows whose end the final watermark (max event time − 1 h) passed.
     */
-  def hourlyStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_append")
-    val out = runAppendToFiles(spark, dir, hourlyStats, s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp) // deletion happens at JVM exit, after any read
-    out
-  }
+  def hourlyStatsAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    probeToBatch(hourlyStats(source(spark, dir)))(identity)
 
   /** Per-session rows from event-time session windows (30-minute gap),
     * with boundaries in epoch MICROS: integer columns are hash-portable
@@ -305,12 +358,8 @@ object EventStreams {
     * state row is evicted (session state is bounded by open sessions per
     * user within the watermark horizon, never by stream history).
     */
-  def sessionWindowsAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sessions")
-    val out = runAppendToFiles(spark, dir, sessionWindows(_), s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def sessionWindowsAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    probeToBatch(sessionWindows(source(spark, dir)))(identity)
 
   /** STREAM-STREAM INTERVAL JOIN: every (purchase, click) pair for the same
     * user with the click inside the hour before (or at) the purchase — the
@@ -350,11 +399,7 @@ object EventStreams {
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    val out = attributionPairs(purchases, clicks)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_attr")
-    val result = drainAppendToParquet(spark, out, s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    result
+    probeToBatch(attributionPairs(purchases, clicks))(identity)
   }
 
   /** Conversion window for [[funnelRows]]: steps 2..n must land within
@@ -516,15 +561,10 @@ object EventStreams {
     * shape). The oracle replays the windowed, watermark-gated semantics
     * exactly — see `q_stream_funnel_append` in SparkEntry.
     */
-  def funnelAppendToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_funnel")
-    val out = withStreamShufflePartitions(spark) {
-      val frame = funnelRows(source(spark, dir)).toDF()
-      drainAppendToParquet(spark, frame, s"$tmp/out", s"$tmp/ckpt")
+  def funnelAppendToBatch(spark: SparkSession, dir: String): DataFrame =
+    withStreamShufflePartitions(spark) {
+      probeToBatch(funnelRows(source(spark, dir)).toDF())(identity)
     }
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
 
   /** STREAM-STATIC ENRICHMENT JOIN — the dimension-lookup topology every
     * ingest pipeline runs: the purchase stream joins the static customer
@@ -547,14 +587,9 @@ object EventStreams {
   /** Drain [[enrichedPurchases]] over the driver's events dir to a parquet
     * sink and read it back.
     */
-  def enrichedPurchasesToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_enrich")
-    val out = drainAppendToParquet(spark,
-      enrichedPurchases(rawSource(spark, dir), graft.Tables.customer(spark, dir)),
-      s"$tmp/out", s"$tmp/ckpt")
-    deleteRecursivelyOnExit(tmp)
-    out
-  }
+  def enrichedPurchasesToBatch(spark: SparkSession, dir: String): DataFrame =
+    probeToBatch(enrichedPurchases(
+      rawSource(spark, dir), graft.Tables.customer(spark, dir)))(identity)
 
   /** Streaming exactly-once ingest dedup: drop duplicate event ids within
     * the watermark horizon — the standard at-least-once → exactly-once
@@ -573,8 +608,7 @@ object EventStreams {
     */
   def sessionCountsToBatch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    runToBatch(spark, dir, sessionStats(_),
-      s"stream_sessions_${System.nanoTime()}")
+    runToBatch(spark, dir, sessionStats(_))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
   }

@@ -61,38 +61,6 @@ object SketchStreams {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** Drain the stream in update mode, upserting changed nodes into the
-    * store (append-only log + merge-on-read, the LSM shape).
-    */
-  def nodeCountsUpdateToStore(
-      orders: DataFrame, storeDir: String, ckptDir: String): Unit = {
-    val counts = nodeCounts(orders)
-    EventStreams.withStreamShufflePartitions(counts.sparkSession) {
-      val q = counts.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(storeDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
-
-  /** Merge-on-read of the node store: latest batch's count wins per node. */
-  def readNodeStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("l", IntegerType), StructField("b", LongType),
-      StructField("cnt", LongType), StructField("batch_id", LongType)))
-    spark.read.schema(schema).parquet(storeDir)
-      .groupBy("l", "b")
-      .agg(max_by(struct(col("batch_id"), col("cnt")), col("batch_id"))
-        .getField("cnt").as("cnt"))
-  }
-
   /** End-to-end twin: stream the orders table into the node store, then
     * answer ranks/quantiles off the drained store with the SAME answer
     * stage as the batch query (the exact-side columns read the batch
@@ -100,14 +68,9 @@ object SketchStreams {
     */
   def quantileSketchViaStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_qsketch")
-    // an empty stream never fires foreachBatch: pre-create the store dir
-    java.nio.file.Files.createDirectories(tmp.resolve("store"))
-    nodeCountsUpdateToStore(ordersSource(spark, dir), s"$tmp/store", s"$tmp/ckpt")
-    val nodes = readNodeStore(spark, s"$tmp/store").localCheckpoint()
-    EventStreams.deleteRecursivelyOnExit(tmp)
     Sketches.quantileAnswers(
-      nodes,
+      EventStreams.upsertDrain(nodeCounts(ordersSource(spark, dir)), "l", "b")
+        .localCheckpoint(),
       Sketches.quantileCents(graft.Tables.orders(spark, dir)).localCheckpoint())
   }
 
@@ -128,38 +91,6 @@ object SketchStreams {
       .groupBy("lang", "j")
       .agg(min(col("bl")).as("minb"))
 
-  /** Drain the stream in update mode, upserting changed registers into the
-    * store (append-only log + merge-on-read, the LSM shape).
-    */
-  def hllRegistersUpdateToStore(
-      docs: DataFrame, storeDir: String, ckptDir: String): Unit = {
-    val mins = hllRegisterMins(docs)
-    EventStreams.withStreamShufflePartitions(mins.sparkSession) {
-      val q = mins.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(storeDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
-
-  /** Merge-on-read of the register store: latest batch's min wins. */
-  def readRegisterStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("lang", StringType), StructField("j", LongType),
-      StructField("minb", IntegerType), StructField("batch_id", LongType)))
-    spark.read.schema(schema).parquet(storeDir)
-      .groupBy("lang", "j")
-      .agg(max_by(struct(col("batch_id"), col("minb")), col("batch_id"))
-        .getField("minb").as("minb"))
-  }
-
   /** End-to-end twin: stream the documents table into the register store,
     * then estimate per-language vocabulary off the drained store with the
     * SAME answer stage — and therefore the same DuckDB oracle — as the
@@ -168,14 +99,10 @@ object SketchStreams {
     */
   def hllVocabViaStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_hll")
-    java.nio.file.Files.createDirectories(tmp.resolve("store"))
-    hllRegistersUpdateToStore(
-      DocumentStreams.rawSource(spark, dir), s"$tmp/store", s"$tmp/ckpt")
-    val regs = readRegisterStore(spark, s"$tmp/store").localCheckpoint()
-    EventStreams.deleteRecursivelyOnExit(tmp)
     Sketches.hllAnswers(
-      regs,
+      EventStreams.upsertDrain(
+        hllRegisterMins(DocumentStreams.rawSource(spark, dir)), "lang", "j")
+        .localCheckpoint(),
       Sketches.tokenize(
         graft.Parallelism.ensure(graft.Tables.documents(spark, dir))))
   }

@@ -99,22 +99,23 @@ class DocumentStreamsSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1")
       .option("recursiveFileLookup", "true") // each .write above is a subdir
       .parquet(srcDir.toString)
-    DocumentStreams.wordCountsUpdateToStore(docs, s"$tmp/store", s"$tmp/ckpt")
+    EventStreams.upsertToStore(
+      graft.operators.WordCount.counts(docs, "text"), s"$tmp/store")
     // the log-structured store holds MORE rows than the vocabulary (one
     // per word per batch that changed it) — the upsert semantics live in
     // the merge-on-read
     val logRows = spark.read.parquet(s"$tmp/store")
     assert(logRows.count() > logRows.select("word").distinct().count(),
       "expected at least one cross-batch word update in the store log")
-    val merged = DocumentStreams.readWordStore(spark, s"$tmp/store")
+    val merged = EventStreams.latestPerKey(spark.read.parquet(s"$tmp/store"), "word")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(merged === Map("alpha" -> 3L, "beta" -> 2L, "gamma" -> 1L))
     // compaction rewrites the log to one row per word and preserves the
     // merge-on-read answer (and future, higher, batch ids still win)
-    DocumentStreams.compactWordStore(spark, s"$tmp/store")
+    EventStreams.compactStore(spark, s"$tmp/store", "word")
     val compacted = spark.read.parquet(s"$tmp/store")
     assert(compacted.count() === 3)
-    val afterCompact = DocumentStreams.readWordStore(spark, s"$tmp/store")
+    val afterCompact = EventStreams.latestPerKey(spark.read.parquet(s"$tmp/store"), "word")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterCompact === merged)
     EventStreams.deleteRecursivelyOnExit(srcDir)
@@ -373,5 +374,22 @@ class DocumentStreamsSpec extends SparkSpec {
         graft.Tables.documents(spark, dir))))
     assert(streamed === full)
     assert(streamed.nonEmpty)
+  }
+
+  test("probeToBatch reads back perBatch's schema whether or not a batch fired") {
+    val empty = java.nio.file.Files.createTempDirectory("probe_empty_src")
+    def probed(dir: String) = EventStreams.probeToBatch(
+      DocumentStreams.rawSource(spark, dir))(graft.operators.Dedup.repetitionExcise(_))
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    // no documents.parquet in the dir: the stream fires no batch, so the
+    // schema comes from perBatch over an empty static frame
+    val none = probed(empty.toString)
+    val some = probed(sf("sf0.001"))
+    assert(none.count() === 0)
+    assert(some.count() > 0)
+    assert(shape(none) === shape(some))
+    assert(shape(some) === shape(graft.operators.Dedup.repetitionExcise(
+      graft.Tables.documents(spark, sf("sf0.001")))))
+    EventStreams.deleteRecursivelyOnExit(empty)
   }
 }

@@ -336,8 +336,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("session windows cover all events with plausible session counts") {
     val dir = sf("sf0.001")
-    val sessions = EventStreams.runToBatch(
-      spark, dir, EventStreams.sessionStats(_), s"stream_sessions_${System.nanoTime()}")
+    val sessions = EventStreams.runToBatch(spark, dir, EventStreams.sessionStats(_))
       .collect()
     val batchSessions = graft.operators.EventAnalytics
       .sessionCounts(graft.Tables.events(spark, dir))

@@ -31,7 +31,7 @@ class SketchStreamsSpec extends SparkSpec {
       input.addData(100.0) // revisits 100.0's nodes: update must supersede
       q.processAllAvailable()
     } finally q.stop()
-    val got = SketchStreams.readNodeStore(spark, store).collect()
+    val got = EventStreams.latestPerKey(spark.read.parquet(store), "l", "b").collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     // batch-side expectation over the full value multiset
     val values = Seq(100.0, 250.75, 100.0)
@@ -73,7 +73,7 @@ class SketchStreamsSpec extends SparkSpec {
       input.addData(("en", "beta delta epsilon zeta"))
       q.processAllAvailable()
     } finally q.stop()
-    val got = SketchStreams.readRegisterStore(spark, store).collect()
+    val got = EventStreams.latestPerKey(spark.read.parquet(store), "lang", "j").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     // batch-side expectation: the same register arithmetic over the full
     // corpus, via the shared hllRegisterRows helper
