@@ -50,6 +50,14 @@ object Sessions {
       // Verify, RunOne, Main) all build their session through here first,
       // which is the path the setting exists for.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // One executor class loader for all sessions. Spark 4 isolates
+      // each session's artifacts in its own executor-side loader, and
+      // the codegen cache key includes the loader. A streaming query
+      // runs in a CLONED session, so every stream drain recompiled its
+      // task-side classes (perfbench curation, 4 cores: ~70 classes and
+      // 0.3-0.8 s per pass over the stream twins). The engine adds no
+      // per-session jars or files, so there is nothing to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // dev affordance (guide §1: measure first): SPARK_GRAFT_EVENTLOG=<dir>
     // turns on Spark's JSON event log so a diagnostic run's per-job /
     // per-stage timings can be read offline (the UI is disabled for bench

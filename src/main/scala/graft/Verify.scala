@@ -16,6 +16,10 @@ object Verify {
     // queries (the driver never sets it, so the gate always runs the lot)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    // every query that throws is recorded as name<TAB>error in
+    // failures.tsv beside oracle_sql.json (empty file = none failed),
+    // so the checker's "missing output" has its cause on disk
+    val failures = Seq.newBuilder[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -23,6 +27,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures += s"$name\t${oneLine(e)}"
       }
       // drop checkpointed blocks so 34 queries' worth don't accumulate
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -42,6 +47,14 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val failed = failures.result()
+    Files.writeString(Paths.get(s"$outDir/failures.tsv"),
+      failed.map(_ + "\n").mkString)
+    println(s"[verify] ${failed.size} queries failed (see $outDir/failures.tsv)")
     spark.stop()
   }
+
+  /** The error's class and message on one tab-free line (a TSV field). */
+  private def oneLine(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}".replaceAll("[\t\r\n]+", " ")
 }

@@ -687,7 +687,7 @@ object Dedup {
     * identity and member counts must be side-local or the rep→member
     * expansion would leak across the split.
     */
-  private def sideKeyed(side: DataFrame): DataFrame =
+  private[graft] def sideKeyed(side: DataFrame): DataFrame =
     if (side.columns.contains("group_id")) {
       // STORE path: group_id is already an exact content key (the store
       // windows by the full sh array once, at build time), so the
@@ -729,40 +729,53 @@ object Dedup {
     * pure functions of the two shingle sets, which are identical across
     * a content group.
     *
-    * Built ONCE per corpus (a production pipeline publishes exactly this
-    * bundle per artifact cycle); streaming callers freeze all three
-    * frames before the micro-batch loop so a probe does ZERO corpus-side
-    * work beyond the banded equi-join — the r18 first cut recomputed the
-    * grouping window inside every probe and cost each streaming twin
-    * ~1.2 s/query at sf0.1.
+    * ONE KEYED FRAME per build: `repSh` and `memberMap` are projections
+    * of the side-keyed corpus frame and `idx` bands its reps, so the side
+    * grouping runs once however many frames a consumer reads. Lazy
+    * bundles serve one-plan consumers (Spark reuses the shared
+    * exchanges); consumers that probe more than once — the streaming
+    * twins' micro-batch loops, the stored bundle's three writes — build
+    * with `frozen = true`, which is exactly two materializations: the
+    * keyed frame and the capped `idx`. The r18 first cut recomputed the
+    * grouping inside every probe (~1.2 s/query at sf0.1); the r18
+    * snapshot froze each frame on its own and so keyed three times.
     */
   private[graft] final case class CorpusDedupIndex(
       idx: DataFrame,       // (doc_id = rep, members, band, key), capped
       repSh: DataFrame,     // (rep, sh) — one row per distinct content
       memberMap: DataFrame) // (rep, doc_id) — corpus member expansion
-  {
-    /** The bundle with all three frames eagerly frozen (streaming
-      * callers: per-micro-batch probes must not recompute them). */
-    def materialized: CorpusDedupIndex = CorpusDedupIndex(
-      idx.localCheckpoint(), repSh.localCheckpoint(),
-      memberMap.localCheckpoint())
+
+  /** The bundle of a corpus side whose rows already carry exact
+    * side-local `group_id`/`members` ([[sideKeyed]] output, or a slice
+    * regrouped by [[withContentGroups]]). `band` turns the rep rows into
+    * (doc_id, members, band, key); `frozen` freezes the capped `idx` —
+    * the keyed frame's own materialization belongs to the caller.
+    */
+  private def indexOfKeyed(
+      keyed: DataFrame, maxBucketSize: Int, frozen: Boolean)(
+      band: DataFrame => DataFrame): CorpusDedupIndex = {
+    val reps = keyed.where(col("doc_id") === col("group_id"))
+    val idx = cappedRepIndex(band(reps), maxBucketSize)
+    CorpusDedupIndex(
+      if (frozen) graft.Materialize.iteration(idx) else idx,
+      reps.select(col("doc_id").as("rep"), col("sh")),
+      keyed.select(col("group_id").as("rep"), col("doc_id")))
   }
 
   /** [[CorpusDedupIndex]] from a (doc_id, sh) corpus frame — signs only
     * the distinct contents. */
   private[graft] def corpusBandIndex(
       corpusSh: DataFrame,
-      maxBucketSize: Int = DefaultMaxBucketSize): CorpusDedupIndex = {
+      maxBucketSize: Int = DefaultMaxBucketSize,
+      frozen: Boolean = false): CorpusDedupIndex = {
     val keyed = sideKeyed(corpusSh.select(col("doc_id"), col("sh")))
-    val reps = keyed.where(col("doc_id") === col("group_id"))
-    val idx = cappedRepIndex(
+    indexOfKeyed(
+      if (frozen) graft.Materialize.iteration(keyed) else keyed,
+      maxBucketSize, frozen) { reps =>
       bandedKeys(signaturesFromShingled(reps.select(col("doc_id"), col("sh")))
         .join(reps.select(col("doc_id"), col("members")), Seq("doc_id")),
-        passThrough = Seq("members")),
-      maxBucketSize)
-    CorpusDedupIndex(idx,
-      reps.select(col("doc_id").as("rep"), col("sh")),
-      keyed.select(col("group_id").as("rep"), col("doc_id")))
+        passThrough = Seq("members"))
+    }
   }
 
   /** [[CorpusDedupIndex]] from STORED signature rows (no recomputation
@@ -770,15 +783,25 @@ object Dedup {
     * per batch at 100 TB). */
   private[graft] def corpusBandIndexFromTable(
       corpusTbl: DataFrame,
-      maxBucketSize: Int = DefaultMaxBucketSize): CorpusDedupIndex = {
+      maxBucketSize: Int = DefaultMaxBucketSize,
+      frozen: Boolean = false): CorpusDedupIndex = {
     val keyed = sideKeyed(corpusTbl)
-    val reps = keyed.where(col("doc_id") === col("group_id"))
-    val idx = cappedRepIndex(
-      bandedKeys(reps, passThrough = Seq("members")), maxBucketSize)
-    CorpusDedupIndex(idx,
-      reps.select(col("doc_id").as("rep"), col("sh")),
-      keyed.select(col("group_id").as("rep"), col("doc_id")))
+    corpusBandIndexFromKeyed(
+      if (frozen) graft.Materialize.iteration(keyed) else keyed,
+      maxBucketSize, frozen)
   }
+
+  /** [[CorpusDedupIndex]] from signature rows ALREADY keyed side-locally
+    * (the leak-free splits regroup their corpus slice with
+    * [[withContentGroups]] for the pair miner): no second keying pass.
+    * `frozen` freezes only `idx`; the caller owns `keyedTbl`.
+    */
+  private[graft] def corpusBandIndexFromKeyed(
+      keyedTbl: DataFrame,
+      maxBucketSize: Int = DefaultMaxBucketSize,
+      frozen: Boolean = false): CorpusDedupIndex =
+    indexOfKeyed(keyedTbl, maxBucketSize, frozen)(
+      bandedKeys(_, passThrough = Seq("members")))
 
   /** Weighted-cap filter over a rep-collapsed banded index: a bucket is
     * dropped when its MEMBER-document mass exceeds the cap — the same

@@ -610,17 +610,20 @@ object Pipeline {
       spam: DataFrame, keepers: DataFrame, cdx: Dedup.CorpusDedupIndex,
       threshold: Double)
 
-  /** Build (and materialize once) the [[FunnelArtifacts]] of the corpus
-    * below `split`. With a signature table, the band index derives from
-    * STORED signatures — nothing re-shingles the corpus per batch.
+  /** Build the [[FunnelArtifacts]] of the corpus below `split`. With a
+    * signature table, the band index derives from STORED signatures —
+    * nothing re-shingles the corpus per batch. `frozen` freezes the
+    * dedup bundle for consumers that read it more than once.
     */
   private[graft] def funnelArtifacts(
       documents: DataFrame, split: Long,
-      sigTable: Option[DataFrame], threshold: Double): FunnelArtifacts = {
+      sigTable: Option[DataFrame], threshold: Double,
+      frozen: Boolean = false): FunnelArtifacts = {
     val existing = documents.where(col("doc_id") < split)
+    // a filter over the rank loop's checkpointed last round — cheap to
+    // re-read, so no freeze of its own
     val spam = LinkGraph.spamHosts(existing)
       .select(col("host"), lit(true).as("spam_flag"))
-      .transform(graft.Materialize.iteration)
     val exBase = funnelProjection(existing)
       .join(broadcast(spam), Seq("host"), "left")
       .withColumn("spam", coalesce(col("spam_flag"), lit(false)))
@@ -628,24 +631,23 @@ object Pipeline {
     val keepers = exReach3
       .groupBy("fp").agg(min("doc_id").as("keeper"))
       .transform(graft.Materialize.iteration) // the published exact-dedup artifact
-    val exR4 = exReach3
-      .join(keepers, Seq("fp"))
-      .where(col("doc_id") === col("keeper"))
-      .select("doc_id")
-    val cdx0 = sigTable match {
+    // the stage-4 survivors ARE the keepers: each fp's min doc_id is a
+    // stage-3 row carrying that fp, so reading them off the frozen table
+    // spares the index plan a second pass of the corpus projection
+    val exR4 = keepers.select(col("keeper").as("doc_id"))
+    // one keyed frame feeds idx/repSh/memberMap: the batch funnel reads
+    // each once inside one plan (shared exchanges, no freeze); the
+    // streaming twin and the store's writes ask for `frozen`, which
+    // keys once and freezes the keyed frame and the capped idx
+    val cdx = sigTable match {
       case Some(tbl) =>
-        Dedup.corpusBandIndexFromTable(tbl.join(exR4, Seq("doc_id"), "left_semi"))
+        Dedup.corpusBandIndexFromTable(
+          tbl.join(exR4, Seq("doc_id"), "left_semi"), frozen = frozen)
       case None =>
         Dedup.corpusBandIndex(
-          Dedup.shingled(existing).join(exR4, Seq("doc_id"), "left_semi"))
+          Dedup.shingled(existing).join(exR4, Seq("doc_id"), "left_semi"),
+          frozen = frozen)
     }
-    // freeze the whole probe bundle: the streaming twin probes it once
-    // per micro-batch, and the index/rep/member frames are the published
-    // artifact a production pipeline reads unchanged per batch
-    val cdx = Dedup.CorpusDedupIndex(
-      cdx0.idx.transform(graft.Materialize.iteration),
-      cdx0.repSh.transform(graft.Materialize.iteration),
-      cdx0.memberMap.transform(graft.Materialize.iteration))
     FunnelArtifacts(spam, keepers, cdx, threshold)
   }
 
@@ -736,8 +738,10 @@ object FunnelStore {
     val docs = graft.Tables.documents(spark, dir)
     Dedup.ingestSplitOf(docs).map { split =>
       val out = store.getOrBuild(dir) { o =>
+        // frozen: the three bundle writes below read one keyed frame
         val arts = Pipeline.funnelArtifacts(
-          docs, split, Some(SignatureStore.table(spark, dir)), threshold)
+          docs, split, Some(SignatureStore.table(spark, dir)), threshold,
+          frozen = true)
         arts.spam.select("host").write.mode("overwrite").parquet(s"$o/spam")
         arts.keepers.write.mode("overwrite").parquet(s"$o/keepers")
         arts.cdx.idx.write.mode("overwrite").parquet(s"$o/idx")

@@ -162,7 +162,8 @@ object Splits {
         // group columns span the whole table, so the corpus slice
         // regroups its own rows (one window, paid once at index build);
         // the checkpointed slice then feeds BOTH the pair miner and the
-        // probe index — the corpus store is scanned once.
+        // probe index — the corpus store is scanned once, and keyed once
+        // (the index builds from the keyed slice directly).
         val corpusTbl = Dedup.withContentGroups(
           tbl.where(col("doc_id") < split).drop("group_id", "members"))
           .localCheckpoint()
@@ -175,7 +176,7 @@ object Splits {
         assignArrivals(
           documents.where(col("doc_id") >= split),
           Dedup.probeStoredIndex(
-            Dedup.corpusBandIndexFromTable(corpusTbl),
+            Dedup.corpusBandIndexFromKeyed(corpusTbl),
             tbl.where(col("doc_id") >= split), threshold),
           corpusAssign)
     }

@@ -336,8 +336,9 @@ object DocumentStreams {
     Dedup.ingestSplitOf(docs) match {
       case None => Pipeline.incrementalTrustFunnel(docs) // empty in, empty out
       case Some(split) =>
+        // frozen: every micro-batch probes the bundle
         val arts = Pipeline.funnelArtifacts(
-          docs, split, Some(SignatureStore.table(spark, dir)), 0.5)
+          docs, split, Some(SignatureStore.table(spark, dir)), 0.5, frozen = true)
         Pipeline.funnelRollup(EventStreams.probeToBatch(
           rawSource(spark, dir).where(col("doc_id") >= split))(
           Pipeline.scoreShardAgainstFunnel(_, arts)))
@@ -414,9 +415,10 @@ object DocumentStreams {
         // re-shingling the corpus here.
         val corpusTbl = graft.operators.SignatureStore.table(spark, dir)
           .where(col("doc_id") < split)
-        // the whole probe bundle frozen before the micro-batch loop —
-        // a per-batch probe does zero corpus-side recomputation
-        val cdx = Dedup.corpusBandIndexFromTable(corpusTbl).materialized
+        // the whole probe bundle frozen (keyed once) before the
+        // micro-batch loop — a per-batch probe does zero corpus-side
+        // recomputation
+        val cdx = Dedup.corpusBandIndexFromTable(corpusTbl, frozen = true)
         EventStreams.probeToBatch(rawSource(spark, dir).where(col("doc_id") >= split))(b =>
           Dedup.probeCorpusIndex(Dedup.shingled(b), cdx, 0.5))
     }
@@ -478,12 +480,13 @@ object DocumentStreams {
         // the corpus slice regroups its own rows (the same move as the
         // incremental twin); the checkpointed artifact feeds the pair
         // miner (assignment), the band index, and every batch's
-        // verification join.
+        // verification join. It is already keyed side-locally, so the
+        // bundle builds from it directly and only its `idx` freezes.
         val corpusTbl = Dedup.withContentGroups(
           graft.operators.SignatureStore.table(spark, dir)
             .where(col("doc_id") < split).drop("group_id", "members"))
           .localCheckpoint()
-        val cdx = Dedup.corpusBandIndexFromTable(corpusTbl).materialized
+        val cdx = Dedup.corpusBandIndexFromKeyed(corpusTbl, frozen = true)
         val corpusAssign = Splits.leakFreeSplit(
           corpus, Dedup.nearDuplicatePairsFromTable(corpusTbl))
           .select(col("doc_id").as("corpus_doc"),

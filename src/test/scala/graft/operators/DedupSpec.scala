@@ -930,4 +930,67 @@ class DedupSpec extends SparkSpec {
     val fam = (for { a <- 1L to 6L; b <- (a + 1) to 6L } yield (a, b)).toSet
     assert(full === fam ++ Set((10L, 11L), (20L, 21L)))
   }
+
+  /** sf0.001's (doc_id, text) unioned with an id-offset copy of itself:
+    * every content appears twice, so every keyed group has members > 1. */
+  private def duplicatedDriverDocs() = {
+    val d = graft.Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
+    val off = d.agg(max("doc_id")).head().getLong(0) + 1L
+    d.union(d.select((col("doc_id") + off).as("doc_id"), col("text")))
+  }
+
+  private def bundleRows(cdx: Dedup.CorpusDedupIndex) = (
+    cdx.idx.select("doc_id", "members", "band", "key").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getString(3))).toSet,
+    cdx.repSh.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toSet,
+    cdx.memberMap.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+
+  test("frozen dedup bundle: same contents as the lazy one, rep/member frames read one keyed frame") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Window}
+    def groupingNodes(df: org.apache.spark.sql.DataFrame): Seq[LogicalPlan] =
+      df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate => a
+        case w: Window => w
+      }
+    val plain = graft.Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
+    for ((label, d) <- Seq("sf0.001" -> plain, "sf0.001 + copy" -> duplicatedDriverDocs())) {
+      val tbl = Dedup.withContentGroups(Dedup.shingleSignatureTable(d)).localCheckpoint()
+      val sh = Dedup.shingled(d).localCheckpoint()
+      // the store path (group columns present) and the from-text path
+      for ((path, build) <- Seq[(String, Boolean => Dedup.CorpusDedupIndex)](
+          "table" -> (f => Dedup.corpusBandIndexFromTable(tbl, frozen = f)),
+          "shingles" -> (f => Dedup.corpusBandIndex(sh, frozen = f)))) {
+        val lazyIdx = build(false)
+        val frozen = build(true)
+        val want = bundleRows(lazyIdx)
+        assert(bundleRows(frozen) === want, s"$label/$path")
+        assert(want._1.nonEmpty && want._2.nonEmpty, s"$label/$path")
+        if (d ne plain)
+          assert(want._2.size < want._3.size, s"$label/$path: copies collapse to reps")
+        // the lazy projections re-run the side grouping; the frozen ones
+        // are projections of the one frozen keyed frame
+        assert(groupingNodes(lazyIdx.memberMap).nonEmpty, s"$label/$path")
+        assert(groupingNodes(frozen.repSh).isEmpty, s"$label/$path: repSh")
+        assert(groupingNodes(frozen.memberMap).isEmpty, s"$label/$path: memberMap")
+      }
+    }
+  }
+
+  test("sideKeyed is idempotent on a slice keyed by withContentGroups") {
+    // the leak-free splits build their probe index straight from the
+    // windowed slice; that is exact because keying it again changes nothing
+    val tbl = Dedup.shingleSignatureTable(duplicatedDriverDocs()).localCheckpoint()
+    val split = Dedup.ingestSplitOf(tbl).get
+    val slice = Dedup.withContentGroups(tbl.where(col("doc_id") < split)).localCheckpoint()
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "group_id", "members").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val once = keys(slice)
+    assert(keys(Dedup.sideKeyed(slice)) === once)
+    assert(once.exists(_._3 > 1) && once.exists(_._3 == 1),
+      "the slice holds both duplicated and singleton contents")
+    // so the two index builders agree on it
+    assert(bundleRows(Dedup.corpusBandIndexFromKeyed(slice)) ===
+      bundleRows(Dedup.corpusBandIndexFromTable(slice)))
+  }
 }

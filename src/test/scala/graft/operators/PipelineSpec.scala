@@ -313,6 +313,30 @@ class PipelineSpec extends SparkSpec {
       "stored funnel scoring must read the artifacts, not re-parse pages")
   }
 
+  test("incrementalTrustFunnel: the fresh artifact build keys its dedup bundle once (job budget)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, TestTaskEvents}
+    val dir = sf("sf0.001")
+    val docs = graft.Tables.documents(spark, dir)
+    val sig = SignatureStore.table(spark, dir) // built once per JVM, outside the count
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    TestTaskEvents.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.incrementalTrustFunnel(docs, sigTable = Some(sig)).collect()
+      TestTaskEvents.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    // freezing idx/repSh/memberMap one by one (each re-running the side
+    // grouping and the corpus projection) ran 107 jobs here; one keyed
+    // plan over the keeper ids runs 67-68, and per-frame freezing on top
+    // of it 78. The ceiling leaves room for AQE's few-job swing, not for
+    // a return to per-frame freezing.
+    assert(jobs.get() <= 72, s"${jobs.get()} jobs")
+  }
+
   test("incrementalTrustFunnel: arrival verdicts replay against FROZEN artifacts") {
     import org.apache.spark.sql.functions.{col, md5}
     val dir = sf("sf0.001")

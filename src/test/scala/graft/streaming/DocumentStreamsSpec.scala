@@ -246,7 +246,7 @@ class DocumentStreamsSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf("sf0.001"))
     val split = Dedup.ingestSplitOf(docs).get
     val corpusSh = Dedup.shingled(docs.where(col("doc_id") < split)).localCheckpoint()
-    val cdx = Dedup.corpusBandIndex(corpusSh).materialized
+    val cdx = Dedup.corpusBandIndex(corpusSh, frozen = true)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the shard arrives as two disjoint micro-batches (split by parity):

@@ -9,6 +9,11 @@ import org.apache.spark.{Success, TaskState}
   */
 object TestTaskEvents {
 
+  /** Block until every posted listener event has been delivered (the bus
+    * is asynchronous; `waitUntilEmpty` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   def stageSubmitted(stageId: Int, numTasks: Int): SparkListenerStageSubmitted = {
     val info = new StageInfo(
       stageId, 0, s"stage$stageId", numTasks, Seq.empty, Seq.empty, "details",
